@@ -102,6 +102,9 @@ object Noise {
     * The source side is explicitly `broadcast(...)`: physical plan is a
     * BroadcastNestedLoopJoin with the range predicate evaluated map-side —
     * zero shuffle before the final hash aggregation on (g_lat, g_lon).
+    * With `graft.plans.BucketedRangeJoinRule` installed the join becomes a
+    * cell-bucketed equi-join; the rewrite keeps this hint, so the sources
+    * stay the build side and the grid streams through its `Range` splits.
     */
   def groundNoise(gridDf: DataFrame, sources: DataFrame): DataFrame = {
     val dist = haversineMeters(col("g_lat"), col("g_lon"), col("s_lat"), col("s_lon"))

@@ -38,6 +38,16 @@ import graft.functions.GeoFunctions
   * on the cell key instead of an O(|L| x |R|) nested-loop cross join — the
   * difference between feasible and not at 100 TB.
   *
+  * Every join the rewrite emits keeps the original join's hint, left to
+  * right: each branch joins a filtered copy of the original left side to a
+  * filtered (or exploded) copy of the original right side. A caller's
+  * `broadcast(sources)` therefore still builds the sources side, and the
+  * grid streams through all of its input splits. Dropping the hint lets the
+  * planner broadcast the grid instead, which runs the whole pairing in the
+  * task that reads the sources, or plan the exact branches as
+  * `CartesianProduct`s when neither side fits the broadcast threshold. A
+  * join without a hint gets none.
+  *
   * Recall proof for the bucketed branch (c = cellDeg below, the SPHERICAL
   * bound 2·asin(min(1, 2·sin(r/2R)))): haversine gives
   * sin²(Δlat/2) <= sin²(r/2R), so |Δlat| <= 2·(r/2R) <= c (asin(x) >= x);
@@ -138,7 +148,7 @@ object BucketedRangeJoinRule extends Rule[LogicalPlan] {
     val joinCond = And(
       EqualTo(lCellI.toAttribute, rCellIAttr),
       EqualTo(lCellJ.toAttribute, rCellJAttr))
-    val bucketed = Join(newLeft, genJ, Inner, Some(joinCond), JoinHint.NONE)
+    val bucketed = Join(newLeft, genJ, Inner, Some(joinCond), join.hint)
     // original predicate still applies inside buckets; drop the helper cols
     val branchBucketed = Project(join.output, Filter(rangeCond, bucketed))
 
@@ -150,7 +160,7 @@ object BucketedRangeJoinRule extends Rule[LogicalPlan] {
       case other => other
     }
     def exactBranch(l: LogicalPlan, rgt: LogicalPlan): LogicalPlan = {
-      val joined = Join(l, rgt, Inner, None, JoinHint.NONE)
+      val joined = Join(l, rgt, Inner, None, join.hint)
       // fresh output aliases: Union children must not share attribute ids
       // with the first branch
       Project(join.output.map(a => Alias(a, a.name)()),

@@ -1,5 +1,13 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LogicalPlan, Range => RangeNode}
+import org.apache.spark.sql.execution.{RangeExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, HashJoin}
+
 import graft.noise.Noise
 import graft.plans.BucketedRangeJoinRule
 
@@ -156,6 +164,72 @@ class BucketedRangeJoinRuleSpec extends SparkTestBase {
       Seq((-89.95, -170.0, 110.0, 300.0)).toDF("s_lat", "s_lon", "s_db", "s_alt"))
   }
 
+  // sources parsed from an in-memory payload, as the pipeline ingests them:
+  // no exchange feeds the join, so AQE gets no runtime size for the sources
+  // and, without the hint, broadcasts the grid
+  private lazy val payloadSources = {
+    import spark.implicits._
+    val states = (0 until 100).map { i =>
+      val lat = Noise.NantesLat + ((i * 37) % 100 - 50) * 0.004
+      val lon = Noise.NantesLon + ((i * 61) % 100 - 50) * 0.006
+      s"""["a$i", "C$i", "FR", 1, 1, $lon, $lat, 900.0, ${i % 7 == 0}, 80.0, 90.0,
+         |${i % 5 - 2}.0, null, 950.0, "1000", false, 0]""".stripMargin
+    }.mkString("[", ",", "]").replace("\n", " ")
+    Noise.classifySource(
+      ingest.OpenSkyParser.parse(Seq(s"""{"time": 1, "states": $states}""").toDS()))
+  }
+
+  private def payloadGrid() = Noise.grid(spark, Noise.NantesLat, Noise.NantesLon, 200.0, 20)
+
+  private def rangeCount(pairs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    import graft.functions.GeoFunctions._
+    pairs.filter(haversineMeters(col("g_lat"), col("g_lon"), col("s_lat"), col("s_lon")) <= RMaxM)
+      .groupBy("g_lat", "g_lon").agg(count(lit(1)).as("n"), sum("s_db").as("db"))
+  }
+
+  test("keeps the caller's broadcast hint: the sources build every rewritten join, " +
+    "in either orientation, with no CartesianProduct and unchanged results") {
+    import org.apache.spark.sql.functions.broadcast
+    import BucketedRangeJoinRuleSpec._
+    val gridFirst = () => Noise.groundNoise(payloadGrid(), payloadSources)
+    val sourcesFirst = () => rangeCount(broadcast(payloadSources).crossJoin(payloadGrid()))
+    for ((label, query) <- Seq("grid x broadcast(sources)" -> gridFirst,
+        "broadcast(sources) x grid" -> sourcesFirst)) {
+      val before = query().orderBy("g_lat", "g_lon").collect()
+      val hint = gridSourceHints(query().queryExecution.optimizedPlan)
+      assert(hint.size == 1 && hint.head != JoinHint.NONE, s"$label: $hint")
+      withRule(spark) {
+        val df = query()
+        val optimized = df.queryExecution.optimizedPlan
+        assert(optimized.toString.contains("__cell_i"), s"$label: $optimized")
+        // bucketed join and both exact branches carry the original hint
+        assert(gridSourceHints(optimized) == Seq.fill(3)(hint.head), s"$label: $optimized")
+        assert(cartesianProducts(df.queryExecution.sparkPlan) == 0,
+          s"$label: ${df.queryExecution.sparkPlan}")
+        assert(df.orderBy("g_lat", "g_lon").collect().sameElements(before), label)
+        val fin = finalPlan(df)
+        assert(cartesianProducts(fin) == 0, s"$label: $fin")
+        assert(gridSourceJoins(fin).nonEmpty, s"$label: $fin")
+        assert(gridBuilt(fin).isEmpty, s"$label: the grid builds ${gridBuilt(fin)} in $fin")
+      }
+    }
+  }
+
+  test("a join without a hint gets no hint from the rewrite") {
+    import BucketedRangeJoinRuleSpec._
+    def plain() = rangeCount(payloadGrid().crossJoin(payloadSources))
+    val before = plain().orderBy("g_lat", "g_lon").collect()
+    assert(gridSourceHints(plain().queryExecution.optimizedPlan) == Seq(JoinHint.NONE))
+    withRule(spark) {
+      val df = plain()
+      val optimized = df.queryExecution.optimizedPlan
+      assert(optimized.toString.contains("__cell_i"), optimized)
+      assert(gridSourceHints(optimized) == Seq.fill(3)(JoinHint.NONE), optimized)
+      assert(df.orderBy("g_lat", "g_lon").collect().sameElements(before))
+    }
+  }
+
   test("does not fire on joins without a haversine range predicate") {
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ BucketedRangeJoinRule
@@ -169,4 +243,58 @@ class BucketedRangeJoinRuleSpec extends SparkTestBase {
         spark.experimental.extraOptimizations.filterNot(_ == BucketedRangeJoinRule)
     }
   }
+}
+
+/** Plan probes shared with [[PlanSpec]]: where the grid (the side holding a
+  * `Range`) meets the sources, and which side each such join builds.
+  */
+object BucketedRangeJoinRuleSpec {
+  private object Aqe extends AdaptiveSparkPlanHelper
+
+  /** Runs `body` with the range-join rule installed on `spark`. */
+  def withRule[T](spark: SparkSession)(body: => T): T = {
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations :+ BucketedRangeJoinRule
+    try body
+    finally spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations.filterNot(_ == BucketedRangeJoinRule)
+  }
+
+  /** Hints of the logical joins that pair the grid with the sources. */
+  def gridSourceHints(plan: LogicalPlan): Seq[JoinHint] = {
+    def hasRange(p: LogicalPlan) = p.exists(_.isInstanceOf[RangeNode])
+    plan.collect { case j: Join if hasRange(j.left) != hasRange(j.right) => j.hint }
+  }
+
+  /** The adaptive plan as it ran (executes `df` first). */
+  def finalPlan(df: DataFrame): SparkPlan = {
+    df.collect()
+    df.queryExecution.executedPlan
+  }
+
+  private def hasRange(p: SparkPlan): Boolean = Aqe.find(p) {
+    case _: RangeExec => true
+    case r: ReusedExchangeExec => hasRange(r.child)
+    case _ => false
+  }.isDefined
+
+  /** Physical joins that pair the grid with the sources. */
+  def gridSourceJoins(plan: SparkPlan): Seq[BaseJoinExec] =
+    Aqe.collect(plan) { case j: BaseJoinExec if hasRange(j.left) != hasRange(j.right) => j }
+
+  /** Grid-sources joins that build on the grid side or have no build side. */
+  def gridBuilt(plan: SparkPlan): Seq[String] = gridSourceJoins(plan).flatMap { j =>
+    val build = j match {
+      case h: HashJoin => Some(h.buildSide)
+      case n: BroadcastNestedLoopJoinExec => Some(n.buildSide)
+      case _ => None
+    }
+    build.map(b => if (b == BuildLeft) j.left else j.right) match {
+      case Some(side) if !hasRange(side) => None
+      case _ => Some(s"${j.nodeName} ${build.getOrElse("")}")
+    }
+  }
+
+  def cartesianProducts(plan: SparkPlan): Int =
+    Aqe.collect(plan) { case c: CartesianProductExec => c }.size
 }

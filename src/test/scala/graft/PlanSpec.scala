@@ -265,6 +265,30 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(offenders.isEmpty, s"cartesian products in: $offenders")
   }
 
+  test("q19 and q22 under the range-join rule: the grid streams, the sources build, " +
+    "no CartesianProduct") {
+    // the surface-wide CartesianProduct check above runs without the rule;
+    // with it installed the rewrite must keep groundNoise's broadcast hint
+    import BucketedRangeJoinRuleSpec._
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, HintInfo, JoinHint}
+    val broadcastRight = JoinHint(None, Some(HintInfo(Some(BROADCAST))))
+    withRule(spark) {
+      for (name <- Seq("q19_noise_flagship", "q22_heatmap_rows")) {
+        val df = queries.Registry.all.find(_.name == name).get.run(spark, dir)
+        val optimized = df.queryExecution.optimizedPlan
+        assert(optimized.toString.contains("__cell_i"), name)
+        // every join of the rewrite keeps groundNoise's broadcast(sources)
+        assert(gridSourceHints(optimized) == Seq.fill(3)(broadcastRight), s"$name: $optimized")
+        assert(cartesianProducts(df.queryExecution.sparkPlan) == 0,
+          s"$name: ${df.queryExecution.sparkPlan}")
+        val fin = finalPlan(df)
+        assert(cartesianProducts(fin) == 0, s"$name: $fin")
+        assert(gridSourceJoins(fin).nonEmpty, s"$name: $fin")
+        assert(gridBuilt(fin).isEmpty, s"$name: the grid builds ${gridBuilt(fin)} in $fin")
+      }
+    }
+  }
+
   test("q33 knn scores inside whole-stage codegen with the native dot product") {
     val df = queries.Registry.all.find(_.name == "q33_knn_brute").get.run(spark, dir)
     df.collect() // finalize the adaptive plan so codegen markers materialize
